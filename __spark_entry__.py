@@ -4715,91 +4715,17 @@ DRIVER_WINDOW = 50  # the correctness driver hash-verifies the FIRST this-many
 
 
 def _window_gates() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """The exactly-DRIVER_WINDOW gates the r13 driver run verifies
-    (rows + schema + value-hash vs the DuckDB oracle).  Composition,
-    per VERDICT r12 item 1: the new r13 gate first, then the gates
-    whose implementing source r13 code changes touch (blank-line
-    exclusion + broadcast keep-first shape in the line family, URL
-    percent-encoding normalization + parameterized tracker list,
-    streaming hot-line TTL plumbing), then the FULL 33-gate cohort
-    whose newest driver evidence was round 9, then a fill of the
-    oldest round-10 gates (9 — the second new gate takes the tenth
-    slot). `queries()` asserts the count so a rotation edit can never
+    """The exactly-DRIVER_WINDOW gates the next driver run verifies
+    (rows + schema + value-hash vs the DuckDB oracle), rotated oldest
+    evidence first: all 44 gates whose newest driver evidence is
+    round 10, then 6 of the round-11 cohort — the four that run the
+    range join's build cache (``annotate``, ``annotate_multisnapshot``,
+    ``legacy_annotate``, ``annotate_nearest_site``; ``stream_annotate``
+    is already in the round-10 slice) and the two oldest others.
+    `queries()` asserts the count so a rotation edit can never
     silently misplace the boundary."""
     return {
-        # -- NEW round-13 operators --------------------------------------
-        "web_pipeline_full": q_web_pipeline_full,
-        "url_host_filter": q_url_host_filter,
-        "html_extract": q_html_extract,
-        "html_links": q_html_links,
-        "html_pipeline": q_html_pipeline,
-        "robots_filter": q_robots_filter,
-        "sentence_dedup": q_sentence_dedup,
-        "stream_sentence_dedup": q_stream_sentence_dedup,
-        "kn_nll": q_kn_nll,
-        "badword_filter": q_badword_filter,
-        # -- touched by round-13 code (empty-norm exclusion + broadcast
-        #    keep-first in curation.py, pct_normalize + tracker-param
-        #    parameter in url.py, TTL in streaming_hot_lines) ----------
-        "boilerplate_lines": q_boilerplate_lines,
-        "line_dedup_keep_first": q_line_dedup_keep_first,
-        "url_dedup": q_url_dedup,
-        "stream_url_dedup": q_stream_url_dedup,
-        "web_pipeline": q_web_pipeline,
-        "stream_hot_lines": q_stream_hot_lines,
-        # -- the 33 gates whose newest driver row was round 9 ----------
-        "anti_join": q_anti_join,
-        "attribution_join": q_attribution_join,
-        "bigram_nll": q_bigram_nll,
-        "bm25_rank": q_bm25_rank,
-        "case_pivot": q_case_pivot,
-        "cms_counts": q_cms_counts,
-        "cohort_retention": q_cohort_retention,
-        "corpus_diff": q_corpus_diff,
-        "dedup_incremental": q_dedup_incremental,
-        "distinct_users": q_distinct_users,
-        "doc_chunks": q_doc_chunks,
-        "doc_percentiles": q_doc_percentiles,
-        "embedding_gram": q_embedding_gram,
-        "event_cube": q_event_cube,
-        "event_rollup": q_event_rollup,
-        "event_rollup_hopping": q_event_rollup_hopping,
-        "event_topk_windowed": q_event_topk_windowed,
-        "first_touch": q_first_touch,
-        "funnel": q_funnel,
-        "gap_fill": q_gap_fill,
-        "group_split": q_group_split,
-        "grouping_sets": q_grouping_sets,
-        "having_subquery": q_having_subquery,
-        "incremental_rollup": q_incremental_rollup,
-        "json_extract": q_json_extract,
-        "knn_pagerank": q_knn_pagerank,
-        "linear_interp": q_linear_interp,
-        "pii_redact": q_pii_redact,
-        "quality_quantile_mix": q_quality_quantile_mix,
-        "rolling_avg": q_rolling_avg,
-        "span_dedup": q_span_dedup,
-        "span_dedup_apply": q_span_dedup_apply,
-        "upsert_merge": q_upsert_merge,
-        # -- fill: the oldest round-10 gates (4 slots ceded to the new
-        #    r13 html/kn/badword gates — never-verified gates must sit
-        #    in the window; the displaced r10 gates rejoin the backlog
-        #    head at exactly the rotation horizon) ----------------------
-        "pipeline_full": q_pipeline_full,
-    }
-
-
-def _backlog_gates() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Gates below the driver window — every one hash-green in an
-    earlier round's CORRECTNESS_r*.json over since-unchanged source.
-    Ordered oldest evidence first so the next rotation is a straight
-    slice: the remaining round-10 gates head the r14 window, then the
-    r11 cohort, then the gates the r12 driver verified (rotated out
-    this round, freshest evidence)."""
-    return {
-        # -- remaining round-10 gates (head of the r14 rotation; the
-        #    first four were displaced from the r13 fill by the new
-        #    html/kn/badword gates) --------------------------------------
+        # -- the 44 gates whose newest driver evidence is round 10 -----
         "dedup_keep_best": q_dedup_keep_best,
         "leakage_safe_split": q_leakage_safe_split,
         "dedup_jaccard_prefix": q_dedup_jaccard_prefix,
@@ -4844,10 +4770,26 @@ def _backlog_gates() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "first_last_ignore_nulls": q_first_last_ignore_nulls,
         "fuzzy_match": q_fuzzy_match,
         "interval_overlap_join": q_interval_overlap_join,
-        # -- the r11 cohort (rotated out of the r12 window) -------------
+        # -- round-11 gates: the range-join build cache's four callers
+        #    and the two oldest others ---------------------------------
         "span_dedup_keep_first": q_span_dedup_keep_first,
         "geo_radius_join": q_geo_radius_join,
         "annotate_nearest_site": q_annotate_nearest_site,
+        "annotate": q_annotate,
+        "annotate_multisnapshot": q_annotate_multisnapshot,
+        "legacy_annotate": q_legacy_annotate,
+    }
+
+
+def _backlog_gates() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Gates below the driver window — every one hash-green in an
+    earlier round's CORRECTNESS_r*.json over since-unchanged source.
+    Ordered oldest evidence first so the next rotation is a straight
+    slice: the rest of the round-11 cohort heads the next window, then
+    the round-12 cohort, then the gates the round-14 driver verified
+    (rotated out this round, freshest evidence)."""
+    return {
+        # -- the rest of the round-11 cohort ----------------------------
         "kmeans_fixed": q_kmeans_fixed,
         "knn_pagerank_lsh": q_knn_pagerank_lsh,
         "mom_revenue": q_mom_revenue,
@@ -4872,8 +4814,6 @@ def _backlog_gates() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tpch_q17": q_tpch_q17,
         "tpch_q22": q_tpch_q22,
         "zorder_layout": q_zorder_layout,
-        "annotate": q_annotate,
-        "annotate_multisnapshot": q_annotate_multisnapshot,
         "asn_decode": q_asn_decode,
         "asof_select": q_asof_select,
         "corpus_curation": q_corpus_curation,
@@ -4886,8 +4826,7 @@ def _backlog_gates() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "interval_merge": q_interval_merge,
         "kcore": q_kcore,
         "lang_id": q_lang_id,
-        "legacy_annotate": q_legacy_annotate,
-        # -- the r12 cohort (rotated out of the r13 window) -------------
+        # -- the round-12 cohort ---------------------------------------
         "token_budget_sample_tokens": q_token_budget_sample_tokens,
         "gopher_quality": q_gopher_quality,
         "c4_filter": q_c4_filter,
@@ -4932,6 +4871,57 @@ def _backlog_gates() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_embedding_cosine": q_dedup_embedding_cosine,
         "dedup_embedding_lsh": q_dedup_embedding_lsh,
         "semantic_dedup": q_semantic_dedup,
+        # -- verified by the round-14 driver run ------------------------
+        "web_pipeline_full": q_web_pipeline_full,
+        "url_host_filter": q_url_host_filter,
+        "html_extract": q_html_extract,
+        "html_links": q_html_links,
+        "html_pipeline": q_html_pipeline,
+        "robots_filter": q_robots_filter,
+        "sentence_dedup": q_sentence_dedup,
+        "stream_sentence_dedup": q_stream_sentence_dedup,
+        "kn_nll": q_kn_nll,
+        "badword_filter": q_badword_filter,
+        "boilerplate_lines": q_boilerplate_lines,
+        "line_dedup_keep_first": q_line_dedup_keep_first,
+        "url_dedup": q_url_dedup,
+        "stream_url_dedup": q_stream_url_dedup,
+        "web_pipeline": q_web_pipeline,
+        "stream_hot_lines": q_stream_hot_lines,
+        "anti_join": q_anti_join,
+        "attribution_join": q_attribution_join,
+        "bigram_nll": q_bigram_nll,
+        "bm25_rank": q_bm25_rank,
+        "case_pivot": q_case_pivot,
+        "cms_counts": q_cms_counts,
+        "cohort_retention": q_cohort_retention,
+        "corpus_diff": q_corpus_diff,
+        "dedup_incremental": q_dedup_incremental,
+        "distinct_users": q_distinct_users,
+        "doc_chunks": q_doc_chunks,
+        "doc_percentiles": q_doc_percentiles,
+        "embedding_gram": q_embedding_gram,
+        "event_cube": q_event_cube,
+        "event_rollup": q_event_rollup,
+        "event_rollup_hopping": q_event_rollup_hopping,
+        "event_topk_windowed": q_event_topk_windowed,
+        "first_touch": q_first_touch,
+        "funnel": q_funnel,
+        "gap_fill": q_gap_fill,
+        "group_split": q_group_split,
+        "grouping_sets": q_grouping_sets,
+        "having_subquery": q_having_subquery,
+        "incremental_rollup": q_incremental_rollup,
+        "json_extract": q_json_extract,
+        "knn_pagerank": q_knn_pagerank,
+        "linear_interp": q_linear_interp,
+        "pii_redact": q_pii_redact,
+        "quality_quantile_mix": q_quality_quantile_mix,
+        "rolling_avg": q_rolling_avg,
+        "span_dedup": q_span_dedup,
+        "span_dedup_apply": q_span_dedup_apply,
+        "upsert_merge": q_upsert_merge,
+        "pipeline_full": q_pipeline_full,
     }
 
 

@@ -73,13 +73,17 @@ def scoped_cache(key: str, df: DataFrame) -> DataFrame:
 
 
 def release_caches() -> None:
-    """Unpersist every registered scoped cache."""
+    """Unpersist every registered scoped cache, and the range join's
+    cached search tables (``interval.release_build_cache``)."""
+    from .operators.interval import release_build_cache
+
     for key in list(_live_caches):
         df = _live_caches.pop(key)
         try:
             df.unpersist()
         except Exception:
             pass
+    release_build_cache()
 
 
 def live_cache_count() -> int:

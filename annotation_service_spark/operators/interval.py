@@ -33,19 +33,29 @@ long-typed bounds and used for DuckDB-oracle differential checks.
 (≤ a few GB), the probe side is the 100 TB stream, so the scalable
 plan is a BROADCAST of the sorted ranges + a vectorized binary search
 per Arrow batch (np.searchsorted, O(log n) per probe, zero shuffle)
-— the distributed analog of the reference's in-memory search. A
-bucketed shuffle variant covers build tables too big to broadcast.
+— the distributed analog of the reference's in-memory search. The
+sorted, broadcast tables are cached per snapshot version across
+calls, as the reference loads each dataset once. A bucketed shuffle
+variant covers build tables too big to broadcast.
 """
 
 from __future__ import annotations
 
+import logging
+import threading
+from collections import OrderedDict
 from collections.abc import Sequence
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+from py4j.protocol import Py4JError
+from pyspark import Broadcast
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+log = logging.getLogger(__name__)
 
 # ---------------------------------------------------------------------------
 # numpy helpers on big-endian fixed-width byte bounds ('S16' / 'S8')
@@ -381,6 +391,39 @@ def merge_adjacent_equal(
 # ---------------------------------------------------------------------------
 
 
+def referenced_key_groups(df: DataFrame, keys: Sequence[str]) -> list[tuple]:
+    """The distinct non-null ``keys`` groups of ``df``, as tuples.
+
+    This is the range join's key pass: one small distinct query,
+    logged at DEBUG (under AQE its stages run as separate Spark jobs).
+    Values come back through ``toPandas`` so they compare equal to the
+    group keys the kernel sees in its Arrow batches."""
+    keys = list(keys)
+    pdf = df.select(*keys).distinct().toPandas().dropna()
+    groups = [
+        tuple(v.item() if isinstance(v, np.generic) else v for v in row)
+        for row in pdf.itertuples(index=False, name=None)
+    ]
+    log.debug("range join key pass: %d %s groups", len(groups), keys)
+    return groups
+
+
+def _restrict(ranges: DataFrame, keys: list[str], groups: Sequence[tuple]) -> DataFrame:
+    """``ranges`` filtered to ``groups``: a literal predicate, so a
+    table partitioned by the key prunes its partitions at the scan."""
+    if not keys:
+        return ranges
+    if len(keys) == 1:
+        return ranges.where(F.col(keys[0]).isin([g[0] for g in groups]))
+    cond = F.lit(False)
+    for g in groups:
+        match = F.lit(True)
+        for k, v in zip(keys, g):
+            match = match & (F.col(k) == F.lit(v))
+        cond = cond | match
+    return ranges.where(cond)
+
+
 def _pruned_ranges(
     probes: DataFrame,
     ranges: DataFrame,
@@ -394,18 +437,127 @@ def _pruned_ranges(
     Without this, a multi-snapshot build (the reference's real corpus
     is ~176 snapshots × ~4M rows) would be collected and broadcast in
     full even when the probe batch touches two snapshots — the
-    single-node in-memory model smuggled into Spark. The semi-join
-    costs one map-side-combinable distinct over the probe stream
-    (or nothing, when the caller passes ``probe_keys_df`` — e.g. the
-    registry dates that survived the as-of join)."""
+    single-node in-memory model smuggled into Spark. The referenced
+    groups come from one key pass over the probes, or over
+    ``probe_keys_df`` when the caller has a smaller table naming them
+    (e.g. the registry dates that survived the as-of join)."""
     if not keys or not prune_keys:
         return ranges
-    ref = (
-        probe_keys_df.select(*keys).distinct()
-        if probe_keys_df is not None
-        else probes.select(*keys).distinct()
-    )
-    return ranges.join(F.broadcast(ref), keys, "left_semi")
+    src = probe_keys_df if probe_keys_df is not None else probes
+    return _restrict(ranges, keys, referenced_key_groups(src, keys))
+
+
+# ---------------------------------------------------------------------------
+# Build cache: one sorted search table + broadcast per (build table, group)
+# ---------------------------------------------------------------------------
+
+
+class _Table(NamedTuple):
+    source: DataFrame  # the build table the entry was cut from
+    bc: Broadcast | None  # None: the group has no rows in the build table
+    rows: int
+    nbytes: int
+
+
+# (fingerprint, low, high, payload, keys, group) -> _Table, least recently used first
+_build_cache: OrderedDict[tuple, _Table] = OrderedDict()
+_build_cache_lock = threading.Lock()
+
+# plan leaves whose rows are fixed by the plan itself; file scans are
+# fingerprinted by their listed files, anything else is not cached
+_PLAN_FIXED_LEAVES = {"LocalRelation", "LogicalRDD", "Range", "OneRowRelation"}
+
+
+def _build_fingerprint(ranges: DataFrame) -> tuple | None:
+    """Identity of the rows ``ranges`` yields, computed on the driver
+    without running a job: the application, the plan's
+    ``semanticHash`` and every input file's (path, size, mtime) from
+    the file index the scan already listed. A new manifest version
+    lists other directories and a rewritten table other files, so
+    either one changes the fingerprint. None when the plan is
+    non-deterministic or reads a source without a file index."""
+    try:
+        plan = ranges._jdf.queryExecution().analyzed()
+        if not plan.deterministic():
+            return None
+        files = []
+        leaves = plan.collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.nodeName() == "LogicalRelation":
+                statuses = leaf.relation().location().allFiles()
+                for j in range(statuses.size()):
+                    st = statuses.apply(j)
+                    files.append(
+                        (st.getPath().toString(), st.getLen(), st.getModificationTime())
+                    )
+            elif leaf.nodeName() not in _PLAN_FIXED_LEAVES:
+                return None
+        app = ranges.sparkSession.sparkContext.applicationId
+        return app, ranges.semanticHash(), tuple(sorted(files))
+    except Py4JError:
+        return None
+
+
+def _cache_get(key: tuple, ranges: DataFrame) -> _Table | None:
+    with _build_cache_lock:
+        entry = _build_cache.get(key)
+        if entry is None:
+            return None
+        _build_cache.move_to_end(key)
+    # guard the hash: the entry must come from an equivalent plan
+    return entry if ranges.sameSemantics(entry.source) else None
+
+
+def _evict(limit: int, keep: set, app: str) -> None:
+    """Drop least recently used entries (never those in ``keep``)
+    until the live ones fit ``limit`` bytes; entries of a stopped
+    SparkContext go first. Evicted broadcasts are unpersisted, not
+    destroyed: a plan built before the eviction still holds the
+    handle and re-fetches the value from the driver."""
+    with _build_cache_lock:
+        stale = [k for k in _build_cache if k[0][0] != app]
+        for k in stale:
+            del _build_cache[k]
+        total = sum(e.nbytes for e in _build_cache.values())
+        evicted = []
+        for k in list(_build_cache):
+            if total <= limit:
+                break
+            if k not in keep:
+                entry = _build_cache.pop(k)
+                total -= entry.nbytes
+                evicted.append(entry)
+    for entry in evicted:
+        if entry.bc is not None:
+            entry.bc.unpersist()
+    if evicted:
+        log.debug(
+            "range join build cache: evicted %d groups (%d bytes), %d bytes live",
+            len(evicted), sum(e.nbytes for e in evicted), total,
+        )
+
+
+def release_build_cache() -> None:
+    """Unpersist and forget every cached search table."""
+    with _build_cache_lock:
+        entries = list(_build_cache.values())
+        _build_cache.clear()
+    for entry in entries:
+        if entry.bc is not None:
+            try:
+                entry.bc.unpersist()
+            except Py4JError:
+                pass  # session gone — nothing to release
+    if entries:
+        log.debug("range join build cache: released %d groups", len(entries))
+
+
+def _sort_order(m: np.ndarray) -> np.ndarray:
+    """Stable argsort of (n, width) big-endian uint8 rows, compared as
+    unsigned integers (the order the 'S<width>' search view uses)."""
+    words = np.ascontiguousarray(m).view(">u8").astype(np.uint64)
+    return np.lexsort(words.T[::-1])
 
 
 def range_join_broadcast(
@@ -418,25 +570,45 @@ def range_join_broadcast(
     how: str = "left",
     keys: Sequence[str] = (),
     parse_ips: bool = False,
-    prune_keys: bool = True,
-    probe_keys_df: DataFrame | None = None,
     max_broadcast_bytes: int = 512 << 20,
+    key_groups: Sequence[tuple] | None = None,
 ) -> DataFrame:
     """J1 via broadcast + vectorized binary search
     (iputils/iputils.go:111-128 distributed analog).
 
-    ``ranges`` (sorted disjoint per key group) is collected once and
-    broadcast to every executor; each probe Arrow batch does
-    np.searchsorted — O(log n) per probe, NO shuffle of the 100 TB
-    probe side, no Python-per-row cost. This is the plan a
-    1000-executor cluster wants whenever the build table fits in
-    executor memory (MaxMind snapshots do: ~4M rows ≪ broadcast
-    limits).
+    ``ranges`` (sorted disjoint per key group) becomes one sorted
+    search table per key group, each broadcast to every executor; each
+    probe Arrow batch does np.searchsorted — O(log n) per probe, NO
+    shuffle of the 100 TB probe side, a vectorized search. This is
+    the plan a 1000-executor cluster wants whenever the build table
+    fits in executor memory (MaxMind snapshots do: ~4M rows ≪
+    broadcast limits).
+
+    The tables are built once per build-table version, not per call —
+    the reference loads each dated dataset once and serves every
+    request from memory (geoloader/geoloader.go:122-152). A
+    process-wide LRU cache holds one (sorted table, ``Broadcast``) per
+    (build-table fingerprint, columns, key group); the fingerprint is
+    the plan's ``semanticHash`` plus the input files' path, size and
+    mtime, read from the scan's file index on the driver, so a
+    manifest commit or a rewritten table always misses. A call whose
+    groups are all cached runs no job. Missing groups are built with
+    one ``toPandas`` over ``ranges`` filtered to them and sorted in
+    numpy. Entries are bounded in bytes by ``max_broadcast_bytes``;
+    ``caching.release_caches()`` drops them. Non-deterministic build
+    plans, and sources without a file index, are rebuilt every call.
+    Executors keep a cached group's broadcast blocks across calls, so
+    it is neither collected nor shipped again.
 
     ``keys``: optional equi-join columns shared by probes and ranges
-    (e.g. ``dataset_date`` after an as-of join) — the broadcast holds
-    one sorted array per key group, composing J2∘J1 without any
-    probe-side shuffle.
+    (e.g. ``dataset_date`` after an as-of join) — one table per key
+    group, composing J2∘J1 without any probe-side shuffle. Only the
+    groups the probes reference are looked up or built, so an
+    unreferenced snapshot is never collected: pass them as
+    ``key_groups`` (``referenced_key_groups`` — ``annotate`` shares one
+    key pass between its geo and asn joins); otherwise one key pass
+    over the probes runs here (over ``ranges`` for streaming probes,
+    which cannot be collected: every group).
 
     Misses keep NULL payloads (how='left') or are dropped ('inner'),
     mirroring ErrNodeNotFound handling (geolite2v2/geo-ip.go:162).
@@ -447,40 +619,72 @@ def range_join_broadcast(
     ArrowEvalPython + MapInPandas — measured ~2x probe throughput on
     the annotate hot path.
 
-    Scale guards: with ``keys`` the build table is SEMI-JOINED to the
-    distinct key groups the probes reference before collection
-    (``prune_keys``; pass ``probe_keys_df`` to supply the referenced
-    keys without a probe-side pass), and the collected size is
-    estimated first — past ``max_broadcast_bytes`` the call falls
-    back to ``range_join_bucketed`` (long bounds) instead of
-    broadcasting a build table that belongs in a shuffle join.
+    Size gate: cached groups count their exact size; for missing
+    groups Catalyst's sizeInBytes estimate is free, and only when the
+    total crosses ``max_broadcast_bytes`` does one ``count()`` job
+    price them per row. Past the threshold the call falls back to
+    ``range_join_bucketed`` (long bounds) instead of broadcasting a
+    build table that belongs in a shuffle join.
     """
     payload = list(payload)
     keys = list(keys)
     is_long = isinstance(ranges.schema[low].dataType, (T.LongType, T.IntegerType))
     width = 8 if is_long else 16
+    row_bytes = 2 * width + 64 * len(payload) + 16 * len(keys)
 
-    pruned = _pruned_ranges(probes, ranges, keys, prune_keys, probe_keys_df)
+    if not keys:
+        groups = [()]
+    elif key_groups is not None:
+        groups = [tuple(g) for g in key_groups]
+    else:
+        groups = referenced_key_groups(ranges if probes.isStreaming else probes, keys)
 
-    # size gate, two tiers: Catalyst's sizeInBytes estimate is FREE
-    # (no job, no double execution of the build subplan); only when
-    # that (over)estimate crosses the threshold do we pay one count()
-    # job for a precise per-row-bytes estimate before falling back —
-    # so the common small-build path stays zero-extra-jobs.
-    try:
-        est_bytes = int(
-            str(pruned._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    fp = _build_fingerprint(ranges)
+    if fp is None:
+        log.debug("range join build cache: build table not cacheable, rebuilding")
+    cols = (low, high, tuple(payload), tuple(keys))
+    cache_keys = {g: (fp, *cols, g) for g in groups}
+    tables: dict[tuple, _Table] = {}
+    if fp is not None:
+        for g in groups:
+            entry = _cache_get(cache_keys[g], ranges)
+            if entry is not None:
+                tables[g] = entry
+    missing = [g for g in groups if g not in tables]
+    cached_bytes = sum(e.nbytes for e in tables.values())
+    log.debug(
+        "range join build cache: hit %d groups (%d bytes), miss %d groups",
+        len(tables), cached_bytes, len(missing),
+    )
+
+    # size gate, two tiers: Catalyst's sizeInBytes estimate is FREE (no
+    # job); only when the total crosses the threshold do we pay one
+    # count() job for a per-row estimate of the groups still to build
+    est_bytes = cached_bytes
+    pending = _restrict(ranges, keys, missing)
+    if missing and est_bytes <= max_broadcast_bytes:
+        try:
+            est_bytes += int(
+                str(pending._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+            )
+        except Exception:
+            est_bytes = max_broadcast_bytes + 1  # unknown → verify by count
+        if est_bytes > max_broadcast_bytes:
+            n_ranges = pending.count()
+            est_bytes = cached_bytes + n_ranges * row_bytes
+            log.debug(
+                "range join size gate: count() = %d rows to build, ~%d bytes",
+                n_ranges, est_bytes,
+            )
+    if est_bytes > max_broadcast_bytes:
+        log.debug(
+            "range join size gate: ~%d bytes > max_broadcast_bytes %d, "
+            "bucketed fallback", est_bytes, max_broadcast_bytes,
         )
-    except Exception:
-        est_bytes = max_broadcast_bytes + 1  # unknown → verify by count
-    if est_bytes > max_broadcast_bytes:
-        n_ranges = pruned.count()
-        est_bytes = n_ranges * (2 * width + 64 * len(payload) + 16 * len(keys))
-    if est_bytes > max_broadcast_bytes:
         if is_long and not parse_ips:
             return range_join_bucketed(
-                probes, pruned, probe_col, low=low, high=high,
-                payload=payload, how=how, keys=keys,
+                probes, _restrict(ranges, keys, groups), probe_col, low=low,
+                high=high, payload=payload, how=how, keys=keys,
             )
         raise ValueError(
             f"range_join_broadcast: build table ~{est_bytes >> 20} MiB exceeds "
@@ -489,25 +693,46 @@ def range_join_broadcast(
             "flatten per snapshot and use range_join_bucketed on long bounds"
         )
 
-    # Arrow toPandas: an order of magnitude faster than collect() for
-    # wide/binary build tables (measured ~3s -> ~0.3s at 20k ranges)
-    rpdf = (
-        pruned.select(*keys, low, high, *payload).orderBy(*keys, low).toPandas()
-    )
+    if missing:
+        sc = probes.sparkSession.sparkContext
+        # Arrow toPandas: an order of magnitude faster than collect() for
+        # wide/binary build tables (measured ~3s -> ~0.3s at 20k ranges)
+        rpdf = pending.select(*keys, low, high, *payload).toPandas()
+        parts = (
+            {
+                (k if isinstance(k, tuple) else (k,)): part
+                for k, part in rpdf.groupby(keys, sort=False)
+            }
+            if keys
+            else {(): rpdf}
+        )
+        built = []
+        for g in missing:
+            part = parts.get(g)
+            if part is None or not len(part):
+                tables[g] = _Table(ranges, None, 0, 0)
+                continue
+            lows_m = _to_u8(part[low], width, is_long)
+            order = _sort_order(lows_m)
+            value = (
+                _u8_to_s(lows_m[order]),
+                _u8_to_s(_to_u8(part[high], width, is_long)[order]),
+                part[payload].iloc[order].reset_index(drop=True),
+            )
+            tables[g] = _Table(ranges, sc.broadcast(value), len(part), len(part) * row_bytes)
+            built.append(tables[g])
+        log.debug(
+            "range join build cache: built %d groups (%d rows, %d bytes) from %d build rows",
+            len(missing), sum(t.rows for t in built),
+            sum(t.nbytes for t in built), len(rpdf),
+        )
+        if fp is not None:
+            with _build_cache_lock:
+                for g in missing:
+                    _build_cache[cache_keys[g]] = tables[g]
+            _evict(max_broadcast_bytes, set(cache_keys.values()), fp[0])
 
-    def build_group(g: pd.DataFrame):
-        lows = _u8_to_s(_to_u8(g[low], width, is_long))
-        highs = _u8_to_s(_to_u8(g[high], width, is_long))
-        return lows, highs, g[payload].reset_index(drop=True)
-
-    if keys:
-        bc_val = {
-            (k if isinstance(k, tuple) else (k,)): build_group(g)
-            for k, g in rpdf.groupby(keys, sort=False)
-        }
-    else:
-        bc_val = {(): build_group(rpdf)} if len(rpdf) else {}
-    bc = probes.sparkSession.sparkContext.broadcast(bc_val)
+    bcs = {g: t.bc for g, t in tables.items() if t.bc is not None}
 
     out_fields = list(probes.schema.fields) + [
         T.StructField(c, ranges.schema[c].dataType, True) for c in payload
@@ -572,18 +797,16 @@ def range_join_broadcast(
             res.loc[hit_pos, c] = col_vals[hit_idx]
 
     def lookup(it):
-        tables_by_key = bc.value
         for pdf in it:
             pdf = pdf.reset_index(drop=True)
             res = pd.DataFrame(index=pdf.index, columns=payload, dtype=object)
             if keys:
                 for kv, sub in pdf.groupby(keys, dropna=False, sort=False):
-                    kt = kv if isinstance(kv, tuple) else (kv,)
-                    tables = tables_by_key.get(kt)
-                    if tables is not None:
-                        lookup_one(tables, sub, res)
-            elif tables_by_key:
-                lookup_one(tables_by_key[()], pdf, res)
+                    bc = bcs.get(kv if isinstance(kv, tuple) else (kv,))
+                    if bc is not None:
+                        lookup_one(bc.value, sub, res)
+            elif bcs:
+                lookup_one(bcs[()].value, pdf, res)
             out = pd.concat([pdf[probe_names], res], axis=1)
             if how == "inner" and payload:
                 out = out[out[payload[0]].notna()]

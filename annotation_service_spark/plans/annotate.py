@@ -18,10 +18,17 @@ so a single binary search replaces the reference's per-family lists
 (manager/manager.go:213-226 becomes a representation choice).
 
 Scale notes: the probe side (the 100 TB stream) flows through ONE
-mapInPandas (broadcast binary search, possibly keyed by snapshot) and
-TWO broadcast hash joins (locations, asnames). No probe-side shuffle
-anywhere. Snapshot tables are partitioned by ``dataset_date``;
-partition pruning keeps a narrow-date query from touching history.
+mapInPandas per range join (broadcast binary search, keyed by
+snapshot) and TWO broadcast hash joins (locations, asnames). No
+probe-side shuffle anywhere. With an as-of join, building the plan
+runs one small query: the key pass naming the ``dataset_date`` groups
+the requests reference, shared by the geo and asn joins. Each
+snapshot's sorted search table is built and broadcast once per
+snapshot version and cached across calls (``range_join_broadcast``),
+so a request whose snapshots are already cached runs no other job
+before its action. Snapshot tables are partitioned by
+``dataset_date``; a missing group is read with a partition filter,
+so a narrow-date query never touches history.
 """
 
 from __future__ import annotations
@@ -31,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions import ip as ipf
 from ..operators.asof import asof_join
-from ..operators.interval import range_join_broadcast
+from ..operators.interval import range_join_broadcast, referenced_key_groups
 
 GEO_PAYLOAD = ["gid", "postal_code", "latitude", "longitude"]
 
@@ -173,14 +180,19 @@ def annotate(
 
     When ``date_col`` + ``registry`` are given, an as-of join selects
     the snapshot per request and the range joins are keyed by
-    ``dataset_date`` (J2∘J1); otherwise the single-snapshot tables
-    are used directly.
+    ``dataset_date`` (J2∘J1); one key pass over the as-of output names
+    the snapshots both joins look up (streaming requests skip it and
+    the joins take every snapshot). Otherwise the single-snapshot
+    tables are used directly.
     """
     probes = prepare_probes(requests, ip_col)
     keys: list[str] = []
+    groups = None
     if date_col is not None and registry is not None:
         probes = asof_join(probes, registry, probe_date=date_col)
         keys = ["dataset_date"]
+        if not probes.isStreaming:
+            groups = referenced_key_groups(probes, keys)
 
     geo_hit = range_join_broadcast(
         probes,
@@ -189,6 +201,7 @@ def annotate(
         payload=GEO_PAYLOAD,
         how="left",
         keys=keys,
+        key_groups=groups,
     )
     loc_dim = locations
     with_loc = geo_hit.join(
@@ -214,6 +227,7 @@ def annotate(
         payload=["as_string", "cidr"],
         how="left",
         keys=keys,
+        key_groups=groups,
     )
     systems = ipf.asn_decode(F.col("as_string"))
     with_asname = asn_hit.withColumn(
@@ -277,13 +291,3 @@ def to_v2_response_document(
         ).alias("response_json"),
     )
 
-
-def to_v1_response_keys(
-    annotated: DataFrame, ip_col: str = "ip", ts_col: str = "ts"
-) -> DataFrame:
-    """P17: legacy v1 response keyed ip+base36(epoch)
-    (handler/handler.go:142-174)."""
-    return annotated.withColumn(
-        "response_key",
-        ipf.base36_key(F.col(ip_col), F.unix_timestamp(F.col(ts_col))),
-    )

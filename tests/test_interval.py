@@ -302,6 +302,197 @@ def test_range_join_broadcast_size_gate_raises_for_binary(spark):
         )
 
 
+# --- J1 build cache: one search table per build-table version ----------------
+
+
+def _submitted_jobs(spark, fn):
+    """Run ``fn`` under a fresh job group; return (result, its job ids)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"rangejoin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "range join construction")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(df, *cols):
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def test_range_join_cache_second_call_submits_no_job(spark, tmp_path):
+    dates, ranges_src, probes = _snapshot_fixture(spark)
+    path = str(tmp_path / "ranges")
+    ranges_src.write.partitionBy("dataset_date").parquet(path)
+    ranges = spark.read.parquet(path)
+    groups = iv.referenced_key_groups(probes, ["dataset_date"])
+    assert sorted(groups) == [(dates[0],), (dates[1],)]
+
+    def join(df):
+        return iv.range_join_broadcast(
+            probes, df, probe_col="v", low="low", high="high",
+            payload=["payload"], keys=["dataset_date"], key_groups=groups,
+        )
+
+    first, first_jobs = _submitted_jobs(spark, lambda: join(ranges))
+    assert first_jobs  # the build: one toPandas over the two groups
+    second, jobs = _submitted_jobs(spark, lambda: join(ranges))
+    assert jobs == []
+    # a fresh read of the unchanged files is the same build table
+    reread = spark.read.parquet(path)
+    third, jobs = _submitted_jobs(spark, lambda: join(reread))
+    assert jobs == []
+    want = _rows(first, "pid", "payload")
+    assert _rows(second, "pid", "payload") == want
+    assert _rows(third, "pid", "payload") == want
+    for pid, pl in want:
+        v = pid * 37 % 2000
+        assert pl == f"{dates[pid % 2].isoformat()}:p{v // 100}"
+
+    # keyless build: no key pass either
+    flat = ranges.where(F.col("dataset_date") == dates[0]).drop("dataset_date")
+    keyless = probes.drop("dataset_date")
+    a = iv.range_join_broadcast(
+        keyless, flat, probe_col="v", low="low", high="high", payload=["payload"]
+    )
+    b, jobs = _submitted_jobs(spark, lambda: iv.range_join_broadcast(
+        keyless, flat, probe_col="v", low="low", high="high", payload=["payload"]
+    ))
+    assert jobs == []
+    assert _rows(a, "pid", "payload") == _rows(b, "pid", "payload")
+
+
+def test_range_join_cache_misses_on_new_version_and_rewrite(spark, tmp_path):
+    from annotation_service_spark.streaming.refresh import VersionedTableManifest
+
+    probes = spark.createDataFrame([(i, i * 10) for i in range(10)], "pid long, v long")
+
+    def snapshot(tag):
+        return spark.createDataFrame(
+            [(i * 10, i * 10 + 9, f"{tag}{i}") for i in range(10)],
+            "low long, high long, payload string",
+        )
+
+    def payloads(ranges):
+        out = iv.range_join_broadcast(
+            probes, ranges, probe_col="v", low="low", high="high", payload=["payload"]
+        )
+        return {r.pid: r.payload for r in out.collect()}
+
+    # a VersionedTableManifest commit lists other directories
+    table = str(tmp_path / "table")
+    manifest = VersionedTableManifest(table)
+    d0, d1 = f"{table}/batch=0", f"{table}/batch=1"
+    snapshot("old").write.parquet(d0)
+    manifest.commit(0, [d0])
+    v0 = manifest.read(spark)
+    assert payloads(v0) == {i: f"old{i}" for i in range(10)}
+    snapshot("new").write.parquet(d1)
+    manifest.commit(1, [d1], replace=True)
+    assert payloads(manifest.read(spark)) == {i: f"new{i}" for i in range(10)}
+    assert payloads(v0) == {i: f"old{i}" for i in range(10)}  # pinned reader
+
+    # a parquet table rewritten at the same path lists other files
+    path = str(tmp_path / "rewritten")
+    snapshot("a").write.parquet(path)
+    assert payloads(spark.read.parquet(path)) == {i: f"a{i}" for i in range(10)}
+    snapshot("b").write.mode("overwrite").parquet(path)
+    assert payloads(spark.read.parquet(path)) == {i: f"b{i}" for i in range(10)}
+
+
+def test_range_join_release_and_eviction_keep_built_plans_correct(spark):
+    from annotation_service_spark.caching import release_caches
+
+    dates, ranges, probes = _snapshot_fixture(spark)
+    kw = dict(probe_col="v", low="low", high="high", payload=["payload"],
+              keys=["dataset_date"])
+    want = [
+        (pid, f"{dates[pid % 2].isoformat()}:p{pid * 37 % 2000 // 100}")
+        for pid in range(100)
+    ]
+
+    built = iv.range_join_broadcast(probes, ranges, **kw)
+    release_caches()
+    assert not iv._build_cache
+    assert _rows(built, "pid", "payload") == want
+
+    # an LRU eviction forced by a second build table under a tight bound
+    built = iv.range_join_broadcast(probes, ranges, **kw)
+    mine = [k for k, e in iv._build_cache.items() if e.source is ranges]
+    assert len(mine) == 2
+    other = ranges.withColumn("payload", F.concat(F.col("payload"), F.lit("-b")))
+    row_bytes = 2 * 8 + 64 + 16
+    iv.range_join_broadcast(
+        probes, other, max_broadcast_bytes=2 * 20 * row_bytes, **kw
+    )
+    assert not any(k in iv._build_cache for k in mine)
+    assert _rows(built, "pid", "payload") == want
+
+
+def _v6_bytes(text):
+    import ipaddress
+
+    return ipaddress.ip_address(text).packed
+
+
+# v4 (mapped), a v6 range crossing the 64-bit word boundary, and the
+# link-local /64 zone-scoped probes land in
+_EDGE_RANGES = [
+    (b"\x00" * 10 + b"\xff\xff" + bytes([1, 0, 0, 0]),
+     b"\x00" * 10 + b"\xff\xff" + bytes([1, 0, 0, 255]), "v4"),
+    (_v6_bytes("2001:db8:0:1:ffff:ffff:ffff:ff00"), _v6_bytes("2001:db8:0:2::ff"), "cross"),
+    (_v6_bytes("fe80::"), _v6_bytes("fe80::ffff:ffff:ffff:ffff"), "link"),
+]
+_EDGE_PROBES = [
+    ("1.0.0.5", "v4"),
+    ("2002:0100:0005::1", "v4"),  # 6to4 of 1.0.0.5
+    ("2001:db8:0:1:ffff:ffff:ffff:ff00", "cross"),  # low bound
+    ("2001:db8:0:1:ffff:ffff:ffff:ffff", "cross"),  # last of the low word
+    ("2001:db8:0:2::", "cross"),  # first of the next word
+    ("2001:db8:0:2::ff", "cross"),  # high bound
+    ("2001:db8:0:2::100", None),  # one past
+    ("2001:db8:0:1:ffff:ffff:ffff:feff", None),  # one below
+    ("fe80::1%eth0", "link"),  # zone-scoped
+    ("1.0.1.0", None),
+    ("::ffff:1.0.0.9", "v4"),
+    ("junk", None),
+    ("1.2.3", None),
+    ("", None),
+    (None, None),
+]
+
+
+def test_range_join_cache_hit_equals_miss_on_ip_edge_cases(spark, caplog):
+    import logging
+
+    ranges = spark.createDataFrame(
+        _EDGE_RANGES, "ip_low binary, ip_high binary, payload string"
+    )
+    probes = spark.createDataFrame(
+        [(i, ip) for i, (ip, _) in enumerate(_EDGE_PROBES)], "pid long, ip string"
+    )
+
+    def join():
+        return iv.range_join_broadcast(
+            probes, ranges, probe_col="ip", payload=["payload"], parse_ips=True
+        )
+
+    caplog.set_level(logging.DEBUG, logger=iv.__name__)
+    miss = join()
+    assert any("built 1 groups" in m for m in caplog.messages)
+    caplog.clear()
+    hit, jobs = _submitted_jobs(spark, join)
+    assert jobs == []
+    assert any("hit 1 groups" in m for m in caplog.messages)
+    want = sorted((i, pl) for i, (_, pl) in enumerate(_EDGE_PROBES))
+    assert _rows(miss, "pid", "payload") == want
+    assert _rows(hit, "pid", "payload") == want
+
+
 # ---------------------------------------------------------------------------
 # General interval×interval overlap join (grid-cell blocked)
 # ---------------------------------------------------------------------------

@@ -31,37 +31,29 @@ REPO = pathlib.Path(__file__).resolve().parent.parent
 # so a straight oldest-first rotation keeps every gate within 3 rounds.
 MAX_EVIDENCE_AGE_ROUNDS = 3
 
-# The full 33-gate cohort whose newest driver evidence was round 9
-# (recomputed from CORRECTNESS_r01..r12 — the list from VERDICT r12 item 1).
-R9_STALE = {
-    "anti_join", "attribution_join", "bigram_nll", "bm25_rank",
-    "case_pivot", "cms_counts", "cohort_retention", "corpus_diff",
-    "dedup_incremental", "distinct_users", "doc_chunks", "doc_percentiles",
-    "embedding_gram", "event_cube", "event_rollup", "event_rollup_hopping",
-    "event_topk_windowed", "first_touch", "funnel", "gap_fill",
-    "group_split", "grouping_sets", "having_subquery", "incremental_rollup",
-    "json_extract", "knn_pagerank", "linear_interp", "pii_redact",
-    "quality_quantile_mix", "rolling_avg", "span_dedup", "span_dedup_apply",
-    "upsert_merge",
+# The full 44-gate cohort whose newest driver evidence is round 10
+# (recomputed from CORRECTNESS_r01..r14): outside the 3-round horizon once
+# the round-14 artifact landed, so all of it must be re-verified.
+R10_STALE = {
+    "bloom_join", "cume_dist", "decontaminate_spans", "dedup_clusters",
+    "dedup_containment", "dedup_incremental_minhash", "dedup_jaccard_prefix",
+    "dedup_keep_best", "dedup_ngram_jaccard", "dedup_weighted_jaccard",
+    "dedup_winnow", "dsir_resample", "embedding_decontam", "epoch_shuffle",
+    "event_transitions", "filter_calibration", "first_last_ignore_nulls",
+    "fuzzy_match", "interval_overlap_join", "leakage_safe_split",
+    "nation_volume", "percentile_approx", "posting_lists", "profile_approx",
+    "profile_table", "scalar_subquery", "scd_asof", "semi_join", "set_ops",
+    "stream_annotate", "table_digest", "temperature_mix", "text_normalize",
+    "tfidf_pairs", "tpch_q14", "tpch_q18", "tpch_q19", "tpch_q6", "tpch_q8",
+    "trailing_window", "unigram_nll", "unpivot_measures", "weighted_sample",
+    "weighted_sample_stratified",
 }
 
-# Gates whose implementing source round-13 code changes touch (blank-line
-# exclusion + broadcast keep-first shape in curation.py, URL
-# percent-encoding normalization + parameterized tracker list in url.py,
-# TTL plumbing in streaming_hot_lines) — these must be re-verified by the
-# r13 driver run.
-R13_TOUCHED = {
-    "boilerplate_lines", "line_dedup_keep_first", "url_dedup",
-    "stream_url_dedup", "web_pipeline", "stream_hot_lines",
-}
-
-# Operators introduced in round 13 — never driver-verified before, so
-# they lead the window.
-R13_NEW = {
-    "web_pipeline_full", "url_host_filter",
-    "html_extract", "html_links", "html_pipeline",
-    "robots_filter", "sentence_dedup", "stream_sentence_dedup",
-    "kn_nll", "badword_filter",
+# Gates that run the range join, whose build side is now cached per
+# snapshot version — these must be re-verified by the next driver run.
+R15_TOUCHED = {
+    "annotate", "annotate_multisnapshot", "legacy_annotate",
+    "annotate_nearest_site", "stream_annotate",
 }
 
 
@@ -75,13 +67,12 @@ def test_window_size_and_boundary():
     assert set(em._window_gates()) == window
 
 
-def test_r13_rotation_contents():
+def test_r15_rotation_contents():
     window = set(list(em.queries())[: em.DRIVER_WINDOW])
-    missing_stale = R9_STALE - window
-    assert not missing_stale, f"r9-stale gates outside the window: {missing_stale}"
-    missing_touched = R13_TOUCHED - window
-    assert not missing_touched, f"r13-touched gates outside the window: {missing_touched}"
-    assert R13_NEW <= window
+    missing_stale = R10_STALE - window
+    assert not missing_stale, f"r10-stale gates outside the window: {missing_stale}"
+    missing_touched = R15_TOUCHED - window
+    assert not missing_touched, f"r15-touched gates outside the window: {missing_touched}"
 
 
 def test_every_gate_has_an_oracle_or_is_documented():
